@@ -12,7 +12,8 @@ Usage: python scripts/driver_sim.py [sf_dir] [--emit-json PATH]
 ``--emit-json`` additionally writes a per-query parity ledger in the
 driver's CORRECTNESS_r{N}.json format (committed each round as
 PARITY_r{N}.json so every registered query — not just the driver's
-50-query sample — has a diffable hash record).
+50-query sample — has a diffable hash record). The ledger is written
+whole, red rows included, even when the exit code is 1.
 
 ``--sample N --seed S`` runs a random N-query sample drawn from the
 given seed instead of the full registry. This is the GRADER'S knob
@@ -154,7 +155,11 @@ def main() -> int:
                 print(f"    columns: spark={scols} oracle={ocols}")
     if emit_json:
         payload = {"sf_dir": sf_dir, "n_queries": len(ledger), "queries": ledger}
-        Path(emit_json).write_text(json.dumps(payload, indent=1, sort_keys=True))
+        # write-then-rename: the ledger is complete (red rows included)
+        # or absent, never truncated
+        tmp = Path(f"{emit_json}.tmp")
+        tmp.write_text(json.dumps(payload, indent=1, sort_keys=True))
+        os.replace(tmp, emit_json)
         print(f"wrote {emit_json} ({len(ledger)} queries)")
     if failures:
         print(f"FAILED: {failures}")

@@ -4,29 +4,41 @@
 # session is cut; the 3-decade probe last because it is the longest).
 # Every artifact carries the hostprobe fixture stamps.
 set -x
-cd /root/repo
+cd "$(dirname "$0")/.."
 R="${1:?usage: round_close_chain.sh r10}"
 
-SPARK_GRAFT_BENCH_OUT=/root/repo/BENCH_LOCAL_${R}.json \
-  python3 bench.py > /tmp/bench_${R}_stdout.json 2>/tmp/bench_${R}.err
-echo "BENCH rc=$?"
+# Each artifact is written to <name>.tmp and moved into place only when
+# its command exits 0, so a failed or interrupted step never leaves a
+# truncated artifact behind (a kept .tmp is the failed run's output).
+# driver_sim is the exception: it exits 1 on any red parity row, after
+# writing its complete ledger through its own tmp + rename, so it writes
+# PARITY_<R>.json directly and a red ledger is still the artifact.
+# keep RC ARTIFACT
+keep() {
+  [ "$1" -eq 0 ] && mv "$2.tmp" "$2"
+  echo "$2 rc=$1"
+}
 
-python3 scripts/dump_plans.py --hashes > /root/repo/PLANSHASH_${R}.json \
+SPARK_GRAFT_BENCH_OUT=BENCH_LOCAL_${R}.json.tmp \
+  python3 bench.py > /tmp/bench_${R}_stdout.json 2>/tmp/bench_${R}.err
+keep $? BENCH_LOCAL_${R}.json
+
+python3 scripts/dump_plans.py --hashes > PLANSHASH_${R}.json.tmp \
   2>/tmp/planshash_${R}.err
-echo "PLANSHASH rc=$?"
+keep $? PLANSHASH_${R}.json
 
 python3 scripts/driver_sim.py /root/testdata/sf0.01 \
-  --emit-json /root/repo/PARITY_${R}.json > /tmp/parity_${R}.log 2>&1
-echo "PARITY rc=$?"
+  --emit-json PARITY_${R}.json > /tmp/parity_${R}.log 2>&1
+echo "PARITY_${R}.json rc=$?"
 
-python3 scripts/recall_report.py --deep > /root/repo/RECALL_${R}.json \
+python3 scripts/recall_report.py --deep > RECALL_${R}.json.tmp \
   2>/tmp/recall_${R}.err
-echo "RECALL rc=$?"
+keep $? RECALL_${R}.json
 
 SPARK_GRAFT_PROBE_RUNS=1 SPARK_GRAFT_PROBE_SCALES="sf0.1:/root/testdata/sf0.1:1,sf1_probe:/root/repo/scale_probe/sf1:10,sf10_probe:/root/repo/scale_probe/sf10:100" \
-  python3 scripts/scale_probe.py > /root/repo/SCALEPROBE_${R}_3pt.json \
+  python3 scripts/scale_probe.py > SCALEPROBE_${R}_3pt.json.tmp \
   2>/tmp/scale_probe_${R}.err
-echo "PROBE rc=$?"
+keep $? SCALEPROBE_${R}_3pt.json
 
 # Deep test tier (round-11 verdict #2): the default `pytest tests/` run
 # is the driver-facing fast tier; the endurance soaks run once per

@@ -32,6 +32,14 @@ class StreamingPipeline:
     Each view is an independent query with its own checkpoint —
     per-view failure isolation, like the reference's per-table refresh
     loop (snowflake.py:55-61), but with exactly-once restarts.
+
+    Each view's state lives in one state partition, fixed when its
+    checkpoint is created; materialize.py gives the measured bound.
+    State grows with the time span, not the event volume: over the
+    reference's ~213-day span about 184k rows for ``funnel_5m``, 61k
+    for ``sliding_revenue`` and under 1k for ``active_users_daily``.
+    At that span the three views together still gain from one
+    partition, but ``funnel_5m`` alone is past its break-even.
     """
 
     spark: SparkSession

@@ -6,12 +6,16 @@ resume without reprocessing."""
 from __future__ import annotations
 
 import datetime as dt
+import json
 
 import pytest
 from pyspark.sql import functions as F
 
 from streaming_ecom_analytics_spark.streaming import windows
-from streaming_ecom_analytics_spark.streaming.materialize import start_materialized_view
+from streaming_ecom_analytics_spark.streaming.materialize import (
+    overwrite_materializer,
+    start_materialized_view,
+)
 from streaming_ecom_analytics_spark.streaming.pipeline import StreamingPipeline
 
 SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
@@ -150,6 +154,58 @@ def test_pipeline_end_to_end(spark, events_dir, tmp_path):
     assert funnel.agg(F.sum("event_count")).first()[0] == 7
     active = spark.read.parquet(str(tmp_path / "wh" / "active_users_daily"))
     assert active.count() > 0
+    # every view's state lives in one state partition, while the
+    # caller's session keeps its own shuffle-partition count
+    counts = [
+        op["numShufflePartitions"]
+        for q in pipe.queries
+        for pr in q.recentProgress
+        for op in json.loads(pr.json)["stateOperators"]
+    ]
+    assert counts and set(counts) == {1}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_materialized_view_restart_keeps_recorded_state_partitions(spark, tmp_path):
+    """A checkpoint created at the session's 8 partitions keeps 8 when a
+    later run restarts it through start_materialized_view, and the view
+    still counts every row exactly once."""
+    d = tmp_path / "restart_events"
+    batches = [
+        [(1, _t(0), 1, "view", 1.0, "{}"), (2, _t(1), 2, "purchase", 9.0, "{}")],
+        [(3, _t(6), 1, "view", 1.0, "{}")],
+        [(4, _t(7), 3, "cart", 2.0, "{}"), (5, _t(12), 2, "view", 1.0, "{}")],
+    ]
+
+    def publish(i):
+        spark.createDataFrame(batches[i], SCHEMA).coalesce(1).write.parquet(
+            str(d / f"batch_{i}"), mode="overwrite"
+        )
+
+    view, ckpt = str(tmp_path / "view"), str(tmp_path / "ckpt")
+    publish(0)
+    publish(1)
+    agg = windows.tumbling_event_counts(_stream(spark, str(d)), watermark="1 hour")
+    first = (
+        agg.writeStream.outputMode("complete")
+        .foreachBatch(overwrite_materializer(view))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    first.awaitTermination(120)
+    publish(2)
+    q = start_materialized_view(
+        agg, target_path=view, checkpoint=ckpt, output_mode="complete", available_now=True
+    )
+    q.awaitTermination(120)
+    progress = [json.loads(pr.json) for pr in q.recentProgress]
+    assert any(pr["numInputRows"] for pr in progress)  # the new file was read
+    assert {op["numShufflePartitions"] for pr in progress for op in pr["stateOperators"]} == {8}
+    got = sorted(map(tuple, spark.read.parquet(view).collect()))
+    batch = spark.read.parquet(str(d) + "/*")
+    want = sorted(map(tuple, windows.tumbling_event_counts(batch, watermark=None).collect()))
+    assert got == want and sum(r[-1] for r in got) == 5
 
 
 def test_session_window_streaming(spark, events_dir):
